@@ -82,6 +82,15 @@ def validate_df(
     now: Optional[datetime] = None,
     approx_distinct: bool = False,
 ) -> ValidationReport:
+    """Validate ``df`` against ``contract`` (a Contract or YAML/TOML text).
+
+    The passes over the data — the fused scan, the exact distinct
+    count, each grouped ML and each custom SQL check — run concurrently
+    as separate Spark jobs, in the caller's job group, and nothing is
+    cached: each job reads ``df`` itself. A caller whose frame is an
+    expensive lineage (joins, UDFs, a slow source) should ``cache()``
+    it first; Spark then serves every job from that cache.
+    """
     ctx = compiler.ValidationContext(
         strict=strict,
         schema_only=schema_only,

@@ -5,10 +5,15 @@ custom.rs:433-471 pass/fail):
 
 - guards: non-empty, must start with SELECT, must not contain ';'
   (DDL/DML injection guard), must mention SELECT/COUNT.
-- executed via ``spark.sql`` with the data registered as view ``data``
-  (and additionally under the contract name, so contracts written
-  against their table name — like the reference's own example,
-  examples/contracts/user_events.yml:98-106 — work unchanged).
+- executed via ``spark.sql`` with the data visible as ``data`` (and
+  additionally under the contract name, so contracts written against
+  their table name — like the reference's own example,
+  examples/contracts/user_events.yml:98-106 — work unchanged). Both
+  names are CTEs over a temp view registered under a unique name for
+  this one call and dropped after it, so a caller's own ``data`` view
+  is never replaced and concurrent validations in one session never
+  read each other's frame. The guard below makes this sound: user SQL
+  starts with SELECT, so it is a valid query body after a WITH list.
 - pass/fail: empty result -> pass; single-cell integer -> pass iff 0;
   single-cell boolean -> pass iff true (documented divergence: the
   reference treats any non-integer single cell as failure,
@@ -19,6 +24,7 @@ custom.rs:433-471 pass/fail):
 from __future__ import annotations
 
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,15 +78,22 @@ def run_custom_check(
     if err:
         return fail(err)
 
-    df.createOrReplaceTempView("data")
-    if contract_name and re.match(r"^[A-Za-z_][A-Za-z0-9_]*$", contract_name):
-        df.createOrReplaceTempView(contract_name)
-
+    view = f"__dce_custom_{uuid.uuid4().hex}"
+    ctes = [f"data AS (SELECT * FROM {view})"]
+    if (
+        contract_name
+        and re.match(r"^[A-Za-z_][A-Za-z0-9_]*$", contract_name)
+        and contract_name.lower() != "data"
+    ):
+        ctes.append(f"`{contract_name}` AS (SELECT * FROM data)")
+    df.createTempView(view)
     try:
-        result = spark.sql(check.definition)
+        result = spark.sql(f"WITH {', '.join(ctes)} {check.definition}")
         rows = result.limit(_MAX_COLLECT).collect()
     except Exception as e:  # analysis/execution error
         return fail(f"SQL error: {e}")
+    finally:
+        spark.catalog.dropTempView(view)
 
     if not rows:
         passed, observed = True, {"rows": 0}

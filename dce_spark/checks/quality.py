@@ -15,7 +15,8 @@ All three compile into the fused single-pass aggregation:
   Utc::now(), custom.rs:114 — untestable; deliberately not reproduced).
 
 Note on COUNT(DISTINCT) at scale: this is an exact distinct (shuffle on
-the key). For monitoring-style use where exactness is not required,
+the key), so the compiler runs it as its own job over the key columns
+rather than inside the fused pass. For monitoring-style use where exactness is not required,
 ``approx=True`` swaps in HLL ``approx_count_distinct`` which is a
 single-pass, no-expand aggregate.
 """

@@ -560,6 +560,16 @@ def argmin_assign_cols(
     return F.expr(cid), F.expr(best), F.expr(d2_arr)
 
 
+def _shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as a number. Some platforms set
+    it to a non-numeric value such as ``auto`` (the engine then picks
+    the count); fall back to the default parallelism there."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def semdedup_pair_cosines(
     cells: DataFrame,
     n_cells: int,
@@ -589,7 +599,7 @@ def semdedup_pair_cosines(
     one explicit repartition — nothing here is a local-mode constant.
     """
     spark = cells.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = _shuffle_partitions(spark)
     s = max(1, -(-p // max(int(n_cells), 1)))
     n2 = dot_col(F.col(vec_col), F.col(vec_col))
     a = cells.select(

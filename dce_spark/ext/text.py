@@ -435,30 +435,36 @@ def bpe_train(
     # then, so lineage still never chains more than one fold deep and
     # n_merges materialization jobs disappear (guide §1.2).
     prev = None
-    for _ in range(n_merges):
-        best = (
-            bpe_pair_counts(cur)
-            .orderBy(F.desc("c"), "l", "r")
-            .limit(1)
-            .collect()
-        )
+    try:
+        for _ in range(n_merges):
+            best = (
+                bpe_pair_counts(cur)
+                .orderBy(F.desc("c"), "l", "r")
+                .limit(1)
+                .collect()
+            )
+            if prev is not None:
+                prev.unpersist()
+                prev = None
+            if not best:
+                break
+            left, right, c = best[0]["l"], best[0]["r"], int(best[0]["c"])
+            merges.append((left, right, c))
+            nxt = cur.select(
+                "cnt", bpe_merge_fold(F.col("syms"), left, right).alias("syms")
+            ).persist()
+            prev, cur = cur, nxt
+        if prev is not None:
+            # the final symbolization was never the source of a collect —
+            # materialize it before releasing its parent so the returned
+            # frame reads from its own cache, not a recompute chain
+            cur.count()
+    except BaseException:
+        cur.unpersist()  # the caller never receives it
+        raise
+    finally:
         if prev is not None:
             prev.unpersist()
-            prev = None
-        if not best:
-            break
-        left, right, c = best[0]["l"], best[0]["r"], int(best[0]["c"])
-        merges.append((left, right, c))
-        nxt = cur.select(
-            "cnt", bpe_merge_fold(F.col("syms"), left, right).alias("syms")
-        ).persist()
-        prev, cur = cur, nxt
-    if prev is not None:
-        # the final symbolization was never the source of a collect —
-        # materialize it before releasing its parent so the returned
-        # frame reads from its own cache, not a recompute chain
-        cur.count()
-        prev.unpersist()
     return merges, cur
 
 

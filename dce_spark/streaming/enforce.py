@@ -39,7 +39,13 @@ def validate_stream(
     """
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        report = validate_df(spark, batch_df, contract, context)
+        # validate_df runs several jobs over its input and caches
+        # nothing: persist the micro-batch so the source is read once
+        batch_df.persist()
+        try:
+            report = validate_df(spark, batch_df, contract, context)
+        finally:
+            batch_df.unpersist()
         on_report(batch_id, report)
 
     writer = stream_df.writeStream.foreachBatch(per_batch)

@@ -358,3 +358,132 @@ def test_nested_nulls_skip_mismatched_column(spark):
     assert "schema.nested_nulls:tags" not in by_name  # probe skipped
     # the compatible columns still get their nested probes
     assert "schema.nested_nulls:props" in by_name
+
+
+# --------------------------------------------------- concurrent execution
+# validate_df launches the fused scan, the exact distinct count and every
+# grouped / custom check as concurrent jobs over the uncached input.
+
+_JOBS_EXTRA = """
+quality_checks:
+  completeness:
+    threshold: 0.5
+    fields: [id]
+  uniqueness:
+    fields: [id]
+  custom_checks:
+    - name: rows
+      definition: "SELECT COUNT(*) FROM data"
+  ml_checks:
+    class_balance:
+      label_field: cat
+      max_proportion: 0.9
+"""
+
+
+def _contract_with_raising_check():
+    """The jobs contract plus a temporal_split on a column the frame
+    lacks: its job raises (definition validation would refuse it, so
+    it is set after parsing)."""
+    from dce_spark.contract import TemporalSplitCheck
+
+    c = parse_contract_yaml(mk_contract(_JOBS_EXTRA))
+    c.quality_checks.ml_checks.temporal_split = TemporalSplitCheck(
+        split_field="cat", timestamp_field="no_such_ts"
+    )
+    return c
+
+
+def test_strict_nullability_failure_discards_launched_jobs(spark):
+    df = spark.createDataFrame(
+        [Row(id=None, cat="a", score=1.0, url="https://x")]
+        + [Row(id=i, cat="b", score=1.0, url="https://x") for i in range(5)]
+    )
+    contract = _contract_with_raising_check()
+    # non-strict: the raising job's exception reaches the caller ...
+    with pytest.raises(KeyError, match="no_such_ts"):
+        validate_ctx(spark, df, contract, ValidationContext())
+    # ... strict with a failed nullability probe: the same job still ran
+    # but its result, exception included, is discarded with the others
+    report = validate_ctx(spark, df, contract, ValidationContext(strict=True))
+    assert not checks_by_name(report)["schema.nullability:id"].passed
+    assert {c.category for c in report.checks} == {"schema"}
+    assert report.stats.records_validated == 6
+
+
+def test_every_job_runs_in_the_callers_job_group(spark):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = spark.createDataFrame(
+        [Row(id=i % 40, cat="ab"[i % 2], score=1.0, url="https://x") for i in range(100)]
+    ).repartition(3)
+
+    def marker_job(group):
+        sc.setJobGroup(group, group)
+        sc.parallelize([1], 1).count()
+        (job,) = tracker.getJobIdsForGroup(group)
+        return job
+
+    try:
+        first = marker_job("dce-before")
+        sc.setJobGroup("dce-validate", "validate_df")
+        report = validate_df(spark, df, mk_contract(_JOBS_EXTRA))
+        last = marker_job("dce-after")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert checks_by_name(report)["quality.uniqueness:id"].observed["duplicates"] == 60
+    ours = set(tracker.getJobIdsForGroup("dce-validate"))
+    # fused scan, distinct count, class_balance, custom SQL at least
+    assert len(ours) >= 4
+    assert ours == set(range(first + 1, last))
+
+
+def test_sample_is_read_once_by_every_job(spark):
+    # url is NULL exactly on the 'a' rows, so three different jobs —
+    # fused scan, class_balance, custom SQL — each see how many 'a'
+    # rows the sample holds; they agree only if they read the same rows
+    df = spark.createDataFrame(
+        [Row(id=i, cat="abc"[i % 3], score=1.0, url=None if i % 3 == 0 else "https://x")
+         for i in range(400)],
+        schema="id bigint, cat string, score double, url string",
+    ).repartition(8)
+    extra = _JOBS_EXTRA.replace("fields: [id]", "fields: [id, url]", 1).replace(
+        "SELECT COUNT(*) FROM data", "SELECT COUNT(*) FROM data WHERE cat = 'a'"
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    report = validate_ctx(
+        spark, df, parse_contract_yaml(mk_contract(extra)),
+        ValidationContext(sample_size=50),
+    )
+    by_name = checks_by_name(report)
+    balance = by_name["ml.class_balance:cat"].observed
+    url = by_name["quality.completeness:url"].observed
+    assert report.stats.records_validated == 50
+    assert balance["total"] == url["total"] == 50
+    a_rows = by_name["custom:rows"].observed["value"]
+    assert a_rows == 50 - url["non_null"] == round(balance["proportions"]["a"] * 50)
+    assert by_name["quality.uniqueness:id"].observed["duplicates"] == 0
+    # the materialized sample is released
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+@pytest.mark.parametrize("approx", [False, True])
+def test_uniqueness_counts_on_planted_duplicates(spark, approx):
+    from dce_spark.checks.quality import total_expr, uniqueness_probe
+
+    # 600 keys, 45 of them repeated once, plus 5 NULL-keyed rows
+    ids = list(range(600)) + list(range(0, 90, 2)) + [None] * 5
+    df = spark.createDataFrame(
+        [Row(id=i, cat="a", score=1.0, url="https://x") for i in ids],
+        schema="id bigint, cat string, score double, url string",
+    ).repartition(4)
+    contract = parse_contract_yaml(mk_contract(_JOBS_EXTRA))
+    report = validate_ctx(spark, df, contract, ValidationContext(approx_distinct=approx))
+    got = checks_by_name(report)["quality.uniqueness:id"].observed
+    # the fused single-scan shape the distinct count used to ride
+    probe = uniqueness_probe(contract.quality_checks.uniqueness, df, approx=approx)
+    vals = df.agg(total_expr(), *probe.exprs).collect()[0].asDict()
+    assert got == probe.evaluate(vals).observed
+    if not approx:
+        assert got == {"duplicates": 50, "distinct": 600, "total": 650}

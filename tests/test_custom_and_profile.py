@@ -73,6 +73,71 @@ def test_contract_name_view(spark, df):
     assert r.passed
 
 
+_COUNT_CONTRACT = """
+version: "1"
+name: t
+owner: me
+schema:
+  fields:
+    - {name: id, type: int64}
+    - {name: v, type: float64}
+quality_checks:
+  custom_checks:
+    - name: rows
+      definition: "SELECT COUNT(*) FROM data"
+"""
+
+
+def _views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_callers_data_view_untouched(spark, df):
+    mine = spark.createDataFrame([Row(id=7, v=1.0)] * 5)
+    mine.createOrReplaceTempView("data")
+    try:
+        report = validate_df(spark, df, _COUNT_CONTRACT)
+        assert checks_value(report) == 3  # the validated frame, not the view
+        assert spark.table("data").count() == 5
+    finally:
+        spark.catalog.dropTempView("data")
+
+
+def test_no_views_left_behind(spark, df):
+    before = _views(spark)
+    report = validate_df(spark, df, _COUNT_CONTRACT.replace("name: t", "name: mytable"))
+    assert checks_value(report) == 3
+    assert "data" not in _views(spark) and "mytable" not in _views(spark)
+    assert _views(spark) == before
+
+
+def test_parallel_validations_see_their_own_frames(spark):
+    """More validating threads than cores, with frequent thread
+    switches: each report counts its own frame's rows."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    sizes = [1, 2, 3, 4, 5, 6]
+    frames = [spark.createDataFrame([Row(id=i, v=1.0) for i in range(n)]) for n in sizes]
+    run = inheritable_thread_target(spark)(
+        lambda f: checks_value(validate_df(spark, f, _COUNT_CONTRACT))
+    )
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            assert list(pool.map(run, frames, timeout=300)) == sizes
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def checks_value(report):
+    (c,) = [c for c in report.checks if c.name == "custom:rows"]
+    return c.observed["value"]
+
+
 def test_severity_routing(spark, df):
     contract = """
 version: "1"

@@ -1353,3 +1353,51 @@ def test_opq_transform_is_orthogonal(spark):
         do = sum((x - y) ** 2 for x, y in zip(out[a], out[b]))
         assert abs(dr - do) < 1e-9 * max(1.0, dr), (a, b)
     spark.catalog.clearCache()  # opq fit/apply materialize stages
+
+
+def test_bpe_train_releases_caches_when_a_merge_fails(spark, monkeypatch):
+    """A pair-count failure mid-training must not leave the current or
+    the previous symbolization persisted."""
+    import dce_spark.ext.text as T
+
+    df = spark.createDataFrame(
+        [(1, "aa aa ab"), (2, "aaaa abab")], "doc_id long, text string"
+    )
+    words = T.bpe_words(df)
+    real, calls = T.bpe_pair_counts, []
+
+    def failing_third_call(frame):
+        calls.append(frame)
+        if len(calls) == 3:  # both prev and cur are persisted here
+            raise RuntimeError("pair count failed")
+        return real(frame)
+
+    monkeypatch.setattr(T, "bpe_pair_counts", failing_third_call)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="pair count failed"):
+        T.bpe_train(words, 5)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_semdedup_pair_cosines_non_numeric_shuffle_partitions(spark, monkeypatch):
+    """Platforms may set spark.sql.shuffle.partitions to 'auto'; the
+    salted join then sizes itself from the default parallelism."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from dce_spark.ext.similarity import semdedup_pair_cosines
+
+    cells = spark.createDataFrame(
+        [(i, i % 2, [float(i), 1.0, float(i % 3)]) for i in range(8)],
+        "vec_id long, cid int, v array<double>",
+    )
+    want = sorted(semdedup_pair_cosines(cells, 2).collect())
+    real = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    assert sorted(semdedup_pair_cosines(cells, 2).collect()) == want
+    assert len(want) == 12  # 2 cells of 4 vectors: 6 pairs each
